@@ -13,17 +13,16 @@ paths): every call returns a JSON string ``{"value": <result>, "error":
 embedding the error; ``fail-on-null`` raises when the RPC result is null.
 
 Transports:
-- ``HttpTransport`` — stdlib urllib POST with basic retry/backoff (no
-  third-party deps; batches multiple requests per POST where the server
-  allows JSON-RPC batch arrays).
+- ``HttpTransport`` — stdlib urllib POST, one JSON-RPC request per POST
+  (no third-party deps); retry/backoff lives in ``ethereum_rpc``.
 - ``MockTransport`` — canned (method, params) → response corpus for tests
   (FIXTURES.md §8); also accepts a callable.
 
-Inside Spark these kernels run either as the registered row-level UDFs
-(SQL-name parity) or — for high fan-out — via the ``mapInPandas`` stage in
-``operators/rpc_source.py``, where each Python worker keeps one transport
-with a reusable connection: the Spark analog of the reference's
-conn-per-batch + Workers parallelism (internal/pipeline/batcher.go:64,
+Inside Spark these kernels run only as the ``ethereum_rpc`` /
+``ethereum_rpc_call`` SQL functions (``registry.register_all``), called
+inside each ingest buffer's SQL like the reference's templates; each
+Arrow batch of calls shares one transport. Parallelism is the reference's
+Workers × MaxBatchSize (internal/pipeline/batcher.go:64,
 examples/ethereum_transactions/pipeline.yaml:26).
 """
 
@@ -81,7 +80,8 @@ class Transport:
 
 
 class HttpTransport(Transport):
-    """stdlib JSON-RPC POST transport with bounded retry."""
+    """stdlib JSON-RPC POST transport: one request per POST, no retry of
+    its own (``ethereum_rpc`` retries per the endpoint options)."""
 
     def __init__(self, timeout_s: float = 30.0):
         self.timeout_s = timeout_s
@@ -124,15 +124,9 @@ class MockTransport(Transport):
 _DEFAULT_TRANSPORT: Transport | None = None
 
 
-def set_default_transport(t: Transport | None) -> None:
-    """Install a process-wide transport (tests install MockTransport here;
-    executors inherit it via the closure serialized into the UDF)."""
-    global _DEFAULT_TRANSPORT
-    _DEFAULT_TRANSPORT = t
-
-
 def get_default_transport() -> Transport:
-    """Resolve the transport: explicit install > env-configured mock > HTTP.
+    """Resolve the transport: env-configured mock (cached per process),
+    else a fresh HTTP transport.
 
     ``AGN_RPC_MOCK=module:attr`` names a Transport (or factory) to import —
     env vars reach Spark's Python workers where module globals set on the

@@ -106,6 +106,10 @@ def _positions(key: Column, m_words: int, k: int, salt: str,
     `bloom_filter_array` only catches geometry, not scheme, drift)."""
     m_bits = m_words * BITS_PER_WORD
     if scheme == "km":
+        if k > 7:
+            # past the bound above Spark wraps to negative positions
+            # (silent false negatives) while DuckDB raises
+            raise ValueError(f"scheme 'km' supports k <= 7, got k={k}")
         h1 = _keyed_h60(f"{salt}a:", key)
         h2 = _keyed_h60(f"{salt}b:", key)
         return [(h1 + F.lit(i).cast("long") * h2) % m_bits

@@ -56,6 +56,15 @@ DEFAULT_CONF = {
     # at ~one minor-GC's cost per interval; override for short-lived
     # jobs where the default is irrelevant anyway.
     "spark.cleaner.periodicGC.interval": "2min",
+    # InferFiltersFromGenerate adds `size(x) > 0` under `explode(x)`, and
+    # filter pushdown then copies x's defining expression below its
+    # Project — when x is an ethereum_rpc(...) result, every block is
+    # fetched twice (logs/traces ingest buffers). The inferred filter
+    # changes no result (explode emits nothing for an empty or NULL
+    # array); marking the RPC UDFs nondeterministic instead would forbid
+    # them inside aggregates (`count(ethereum_rpc(...))`).
+    "spark.sql.optimizer.excludedRules":
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     "spark.sql.session.timeZone": "UTC",
     # testdata events.parquet carries TIMESTAMP(NANOS); Spark reads it as a
     # nanosecond long with this flag (convert with timestamp_micros(ts/1000))

@@ -367,3 +367,16 @@ class TestKirschMitzenmacher:
     def test_unknown_scheme_rejected(self, spark, docs):
         with pytest.raises(ValueError, match="scheme"):
             bloom_build(docs, m_words=_M, k=_K, scheme="fnv")
+
+    def test_k_above_overflow_bound_rejected(self, spark, docs):
+        """h1 + (k-1)·h2 < 2^63 is only guaranteed for k <= 7: k=8 must
+        raise up front, k=7 still builds a filter with no false
+        negatives."""
+        with pytest.raises(ValueError, match="k <= 7"):
+            bloom_build(docs, m_words=_M, k=8, scheme="km")
+        with pytest.raises(ValueError, match="k <= 7"):
+            bloom_probe(docs, [0] * _M, m_words=_M, k=8, scheme="km")
+        filt = bloom_build(docs, m_words=_M, k=7, scheme="km")
+        arr = bloom_filter_array(filt, _M)
+        out = bloom_probe(docs, arr, m_words=_M, k=7, scheme="km")
+        assert out.where("bloom_hit = 0").count() == 0

@@ -85,12 +85,9 @@ def test_stale_tip_emits_nothing(spark, tmp_path):
 
 def test_streaming_block_ingest_with_rpc(spark, tmp_path):
     """Full streaming ingest: agn_cursor emits block numbers up to the
-    tip, the batched mapInPandas RPC stage enriches them against the
+    tip, the ``ethereum_rpc`` SQL function enriches them against the
     mock chain, and the parsed results land in parquet — the reference's
     blocks pipeline as ONE readStream."""
-    os.environ["AGN_RPC_MOCK"] = "tests.mock_chain:transport"
-    from agnostic_blockchain_etl_spark.operators.rpc_source import (
-        rpc_response_stage)
     from tests import mock_chain as mc
 
     tip = str(tmp_path / "tip_rpc")
@@ -100,11 +97,10 @@ def test_streaming_block_ingest_with_rpc(spark, tmp_path):
     stream = (spark.readStream.format("agn_cursor")
               .option("start", 0).option("max_batch_size", 5)
               .option("tip_path", tip).load())
-    reqs = stream.select(
-        "n", F.lit("eth_getBlockByNumber").alias("method"),
-        F.format_string('["0x%s", false]',
-                        F.lower(F.hex("n"))).alias("params"))
-    enriched = rpc_response_stage(reqs, "mock://chain")
+    enriched = stream.select("n", F.expr(
+        "ethereum_rpc('eth_getBlockByNumber', "
+        "array(evm_hex_encode_int(n), 'false'), 'mock://chain')"
+    ).alias("response"))
     parsed = enriched.select(
         "n",
         F.get_json_object("response", "$.value.hash").alias("block_hash"),

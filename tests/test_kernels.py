@@ -284,8 +284,8 @@ class TestWave5Regressions:
             decode_wav(wav)
 
     def test_rpc_udfs_null_safe(self):
-        """A NULL method/endpoint/block_number yields the error
-        envelope, never an exception out of the UDF."""
+        """A NULL method/endpoint/block_number or an unknown method
+        yields the error envelope, never an exception out of the UDF."""
         import json as _json
 
         from agnostic_blockchain_etl_spark.session import get_session
@@ -301,3 +301,8 @@ class TestWave5Regressions:
             "CAST(NULL AS BIGINT), 'http://x') AS r").collect()[0]
         env2 = _json.loads(row2.r)
         assert env2["value"] is None and "null" in env2["error"]
+        row3 = spark.sql(
+            "SELECT ethereum_rpc('bogus_method', array(), "
+            "'mock://chain#max-retries=0') AS r").collect()[0]
+        env3 = _json.loads(row3.r)
+        assert env3["value"] is None and "bogus_method" in env3["error"]

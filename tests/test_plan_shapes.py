@@ -376,3 +376,26 @@ def test_shj_guardrails_pinned(spark):
     # and the live session actually carries them
     assert spark.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+
+
+def test_logs_ingest_fetches_receipts_once_per_block(spark):
+    """Catalyst must not copy ``eth_getBlockReceipts`` into a
+    ``size(receipts) > 0`` filter inferred under ``explode(receipts)``:
+    that plans the call twice and fetches every block's receipts twice
+    (the session excludes InferFiltersFromGenerate)."""
+    from agnostic_blockchain_etl_spark.plans.templates import render_string
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "examples", "logs_ingest",
+                           "create_buffer.sql")) as f:
+        spark.sql(render_string(f.read(), {"START": 0, "END": 19,
+                                           "RPC_ENDPOINT": "mock://chain"}))
+    df = spark.table("buffer_0_19")
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ethereum_rpc(eth_getBlockReceipts") == 1, plan
+    assert plan.count("ethereum_rpc(eth_getBlockByNumber") == 1, plan
+    # the RPC UDF stays deterministic, so aggregates may wrap it
+    assert spark.sql(
+        "SELECT count(ethereum_rpc('eth_getBlockByNumber', "
+        "array('0x0', 'false'), 'mock://chain')) AS c FROM range(2)"
+    ).first().c == 2
